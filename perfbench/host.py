@@ -23,6 +23,10 @@ def nproc() -> int:
         return os.cpu_count() or 1
 
 
+#: the cores this process may use when it starts, before a run pins it
+NPROC = nproc()
+
+
 def _meminfo() -> dict:
     out = {}
     with open("/proc/meminfo") as f:
@@ -62,7 +66,8 @@ def _page_cache_probe(tmp_dir: str) -> dict:
 
 
 def telemetry(tmp_dir: str, master: str, spark=None) -> dict:
-    h: dict = {"nproc": nproc(), "master": master}
+    h: dict = {"nproc": NPROC, "pinned_cores": sorted(os.sched_getaffinity(0)),
+               "master": master}
     probes = {
         "loadavg": lambda: list(os.getloadavg()),
         "mem_available_mb": lambda: _meminfo()["MemAvailable"] / 1024.0,

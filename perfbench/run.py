@@ -22,6 +22,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shlex
 import shutil
 import subprocess
 import sys
@@ -35,7 +36,12 @@ sys.path.insert(0, HERE)
 import host  # noqa: E402
 import stats  # noqa: E402
 
-MAX_CPUS = 4  # local[N] with N = min(4, nproc)
+#: a run is pinned to this many cores: local[SPARK_CPUS] task threads,
+#: and a core for the Python client, the JIT and the garbage collector
+PINNED_CPUS = 3
+SPARK_CPUS = 2
+#: the JVM's parallel and concurrent GC threads, capped to match
+JVM_OPTS = "-XX:ParallelGCThreads=2 -XX:ConcGCThreads=1"
 DRIVER_MEM = "2g"  # the inputs are small; the engine's default heap is 24g
 #: workload op kind -> the statement kind its per-layer counts report under
 SNAPSHOT_KIND = {
@@ -82,6 +88,18 @@ def per_layer_names() -> "list[tuple[str, str]]":
     return names
 
 
+def pin_cores(n: int) -> "list[int]":
+    """Pin this process to the first ``n`` cores it may use, before it
+    starts any thread or child: the JVM, its threads and Spark's Python
+    workers all inherit the mask. On a shared host, work spread over
+    mostly idle vCPUs pays for waking each one through the hypervisor,
+    and that cost follows the host's load, not the program; on a few
+    busy cores the hand-offs stay inside the guest."""
+    cores = sorted(os.sched_getaffinity(0))[:n]
+    os.sched_setaffinity(0, cores)
+    return cores
+
+
 class _NoTrace:
     """The untraced run's stand-in for :class:`spans.Tracer`."""
 
@@ -124,7 +142,8 @@ def _env(work: str, cpus: int, trace: bool) -> None:
     Spark into the run's work dir, and fix the session's cores and heap."""
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp, exist_ok=True)
-    conf = [f"spark.sql.warehouse.dir={os.path.join(work, 'warehouse')}"]
+    conf = [f"spark.sql.warehouse.dir={os.path.join(work, 'warehouse')}",
+            f"spark.driver.defaultJavaOptions={JVM_OPTS}"]
     if trace:
         conf += ["spark.eventLog.enabled=true", "spark.eventLog.compress=false",
                  "spark.eventLog.rolling.enabled=false",
@@ -137,7 +156,7 @@ def _env(work: str, cpus: int, trace: bool) -> None:
         "SPARK_GRAFT_CPUS": str(cpus),
         "SPARK_GRAFT_DRIVER_MEM": DRIVER_MEM,
         "PYSPARK_PYTHON": sys.executable,
-        "PYSPARK_SUBMIT_ARGS": " ".join(f"--conf {c}" for c in conf) + " pyspark-shell",
+        "PYSPARK_SUBMIT_ARGS": " ".join(f"--conf {shlex.quote(c)}" for c in conf) + " pyspark-shell",
         "TZ": "UTC",
     })
     time.tzset()
@@ -217,10 +236,12 @@ def run_workload(name: str, seed: int, seconds: float, trace: bool) -> dict:
     import gen
     from workloads import WORKLOADS
 
+    phases = {"start": time.perf_counter()}
     root = os.getcwd()
     work = os.path.join(root, ".perfbench_work", f"{name}-s{seed}-t{int(trace)}-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
-    cpus = min(MAX_CPUS, host.nproc())
+    pinned = pin_cores(PINNED_CPUS)
+    cpus = min(SPARK_CPUS, len(pinned))
     _env(work, cpus, trace)
     data_dir = os.path.join(work, "data")
     cls = WORKLOADS[name]
@@ -240,6 +261,7 @@ def run_workload(name: str, seed: int, seconds: float, trace: bool) -> dict:
 
     wl = cls(None, seed, work, data_dir, tr)
     wl.prepare()
+    phases["prepared"] = time.perf_counter()
 
     t0 = time.perf_counter()
     spark = get_spark("perfbench")
@@ -259,16 +281,19 @@ def run_workload(name: str, seed: int, seconds: float, trace: bool) -> dict:
 
     records: "list[dict]" = []
     t_start = time.perf_counter()
-    for _ in range(max(1, round(seconds / wl.round_s))):
+    for i in range(max(1, round(seconds / wl.round_s))):
         for op in wl.round():
-            records.append(_timed_op(op, f"op{len(records)}", tr, counter))
+            records.append(_timed_op(op, f"op{len(records)}", tr, counter) | {"round": i})
     timed_s = time.perf_counter() - t_start
 
+    phases["timed"] = time.perf_counter()
     finals = wl.finish()
+    phases["checked"] = time.perf_counter()
     stored, plain, live_files = _storage(spark, wl.table_paths(), os.path.join(work, "plain"))
     java_host = host.telemetry(os.path.join(work, "tmp"), f"local[{cpus}]", spark)
     peak_rss_mb = _jvm_peak_rss_mb() + resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024.0
     _stop_spark(spark)
+    phases["stopped"] = time.perf_counter()
 
     reads = [r["latency_s"] for r in records if r["category"] == "read"]
     writes = [r["latency_s"] for r in records if r["category"] == "write"]
@@ -277,10 +302,11 @@ def run_workload(name: str, seed: int, seconds: float, trace: bool) -> dict:
     attempted = len(records) + len(finals)
     failed = len(failed_ops) + len(failed_finals)
     rs, ws = stats.summarize(reads), stats.summarize(writes)
+    rounds = stats.by_round(records)
     e2e = {
         "setup_s": setup_s,
-        "read_p50_s": rs["p50"],
-        "ops_per_s": len(records) / timed_s,
+        "read_p50_s": stats.median(rounds["read_p50_s"]),
+        "ops_per_s": stats.median(rounds["ops_per_s"]),
     }
     extra = {
         "read_tail_s": rs["tail"], "peak_rss_mb": peak_rss_mb,
@@ -290,9 +316,14 @@ def run_workload(name: str, seed: int, seconds: float, trace: bool) -> dict:
     }
     report = {
         "workload": name, "seed": seed, "seconds": seconds, "trace": trace,
-        "timed_s": timed_s, "setup": {"session_s": session_s, "warmup_s": warmup_s},
-        "end_to_end": e2e, "more": extra,
-        "samples": {"read": rs["samples"], "write": ws["samples"], "ops": len(records)},
+        "timed_s": timed_s, "cores": pinned,
+        "setup": {"session_s": session_s, "warmup_s": warmup_s},
+        "phases_s": {"inputs": phases["prepared"] - phases["start"],
+                     "final_checks": phases["checked"] - phases["timed"],
+                     "teardown": phases["stopped"] - phases["checked"]},
+        "end_to_end": e2e, "more": extra, "rounds": rounds,
+        "samples": {"read": rs["samples"], "write": ws["samples"], "ops": len(records),
+                    "rounds": len(rounds["ops_per_s"])},
         "tail_percentile": {"read": rs["tail_pct"], "write": ws["tail_pct"]},
         "errors": [(r["id"], r["kind"], r["error"]) for r in failed_ops] + failed_finals,
         "host_start": telemetry_start,
@@ -429,7 +460,8 @@ def _layers(records, spark_by_op, tracer, session_s, warmup_s, live_files):
 
 def _print_report(rep: dict) -> None:
     print(f"== {rep['workload']} seed={rep['seed']} trace={int(rep['trace'])} "
-          f"ops={rep['samples']['ops']} timed={rep['timed_s']:.2f}s "
+          f"ops={rep['samples']['ops']} rounds={rep['samples']['rounds']} "
+          f"timed={rep['timed_s']:.2f}s "
           f"attempted={rep['attempted']} failed={rep['failed']}")
     tp = rep["tail_percentile"]
     rows = [(k, v, END_TO_END[k]) for k, v in rep["end_to_end"].items()]

@@ -43,5 +43,22 @@ def summarize(values) -> dict:
     return out
 
 
+def by_round(records) -> "dict[str, list[float]]":
+    """Per round of a run: the median read latency and the operations
+    per second of op time. Every round holds the same mix, so the median
+    over rounds is the run's figure, unmoved by a host slowdown that
+    covers fewer than half of the rounds."""
+    rounds: "dict[int, list[dict]]" = {}
+    for r in records:
+        rounds.setdefault(r["round"], []).append(r)
+    out: "dict[str, list[float]]" = {"read_p50_s": [], "ops_per_s": []}
+    for _, rs in sorted(rounds.items()):
+        reads = [r["latency_s"] for r in rs if r["category"] == "read"]
+        if reads:
+            out["read_p50_s"].append(median(reads))
+        out["ops_per_s"].append(len(rs) / sum(r["latency_s"] for r in rs))
+    return out
+
+
 def bad_metric_names(names) -> "list[str]":
     return [n for n in names if not METRIC_NAME.fullmatch(n)]

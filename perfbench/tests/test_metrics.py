@@ -3,6 +3,8 @@
 import json
 import os
 import random
+import subprocess
+import sys
 
 import run
 import spans
@@ -52,6 +54,49 @@ def test_tail_with_ties_counts_ranks():
 def test_summary_falls_back_to_max():
     s = stats.summarize([3.0, 1.0, 2.0])
     assert s == {"samples": 3, "p50": 2.0, "tail_pct": None, "tail": 3.0}
+
+
+def test_round_figures_ignore_a_slow_minority_of_rounds():
+    def rec(rnd, cat, lat):
+        return {"round": rnd, "category": cat, "latency_s": lat}
+
+    recs = []
+    for rnd, slow in ((0, 1.0), (1, 1.0), (2, 3.0)):  # round 2 runs on a slow host
+        recs += [rec(rnd, "read", 0.1 * slow), rec(rnd, "read", 0.3 * slow),
+                 rec(rnd, "read", 0.2 * slow), rec(rnd, "write", 0.4 * slow)]
+    r = stats.by_round(recs)
+    assert [round(x, 9) for x in r["read_p50_s"]] == [0.2, 0.2, 0.6]
+    assert [round(x, 9) for x in r["ops_per_s"]] == [4.0, 4.0, round(4 / 3, 9)]
+    assert stats.median(r["read_p50_s"]) == 0.2 and stats.median(r["ops_per_s"]) == 4.0
+
+
+_PIN_PROBE = """
+import os, subprocess, sys, threading
+sys.path.insert(0, sys.argv[1])
+import run
+cores = set(run.pin_cores(1))
+child = subprocess.Popen([sys.executable, "-c", "import time; time.sleep(60)"])
+done = threading.Event()
+t = threading.Thread(target=done.wait)
+t.start()
+try:
+    print(len(cores) == 1
+          and os.sched_getaffinity(0) == cores
+          and os.sched_getaffinity(t.native_id) == cores
+          and os.sched_getaffinity(child.pid) == cores)
+finally:
+    done.set()
+    t.join()
+    child.kill()
+    child.wait()
+"""
+
+
+def test_pinned_cores_reach_later_threads_and_children():
+    # in a child interpreter, so the test run itself stays unpinned
+    out = subprocess.run([sys.executable, "-c", _PIN_PROBE, BENCH],
+                         capture_output=True, text=True, timeout=60)
+    assert out.stdout.strip() == "True", out.stderr
 
 
 def _span(i, parent, start, end, layer="x"):

@@ -44,7 +44,7 @@ class Op:
 class Workload:
     name = "?"
     scale = 0.01
-    #: nominal seconds per round on a 4-core host: a run measures
+    #: nominal seconds per round on the run's pinned cores: a run measures
     #: max(1, round(seconds / round_s)) whole rounds, so the measured
     #: mix depends on --seconds only, never on the host's speed
     round_s = 10.0
@@ -109,7 +109,7 @@ def family(query: str) -> str:
 class NestedScan(Workload):
     name = "nested_scan"
     scale = 0.01
-    round_s = 12.0
+    round_s = 13.0
 
     def prepare(self):
         import duckdb
@@ -161,7 +161,7 @@ _D0 = (dt.date(2024, 1, 1) - dt.date(1970, 1, 1)).days
 
 #: statement kind -> (category, statements per round)
 DML_KINDS = {
-    "read_pruned": ("read", 12),
+    "read_pruned": ("read", 20),
     "read_version": ("read", 2),
     "read_changes": ("read", 2),
     "write_append": ("write", 1),
@@ -207,7 +207,7 @@ class _TableModel:
 
 class TableDml(Workload):
     name = "table_dml"
-    round_s = 9.0
+    round_s = 12.0
 
     def prepare(self):
         self.vec = VectorIndex(None, self.seed, self.work_dir, self.data_dir, self.tr)
