@@ -1500,8 +1500,14 @@ def _parse_part_value(dirname: str, simple: str):
     return None
 
 
+# the expression classes Spark folds to a per-QUERY literal (the
+# ComputeCurrentTime family), matched as JSON class fields of the
+# analyzed tree — a string literal's text is an escaped JSON value and
+# can never spell one
 _TIME_VALUED_RE = re.compile(
-    r"\b(current_timestamp|current_date|now|localtimestamp|current_timezone)\("
+    r'"class":"org\.apache\.spark\.sql\.catalyst\.expressions\.(?:'
+    r"CurrentTimestamp|Now|CurrentDate|LocalTimestamp|CurrentTime|"
+    r'CurrentTimeZone|CurrentBatchTimestamp)"'
 )
 
 
@@ -1510,15 +1516,16 @@ def _plan_deterministic(df: DataFrame) -> bool:
     plan (and its children) re-evaluates to the same values —
     rand()/uuid() anywhere make it False via the plan's own
     ``deterministic`` flag, and the per-QUERY-folded time functions
-    (current_timestamp & family, which Spark counts as deterministic
-    but folds to a DIFFERENT literal in each execution) are rejected by
-    name from the analyzed tree. Unprovable (any inspection error) is
-    treated as non-deterministic: callers use this to skip a
-    consistency pin, so the safe answer is 'keep the pin'."""
+    (current_timestamp, current_time & family, which Spark counts as
+    deterministic but folds to a DIFFERENT literal in each execution)
+    are rejected by expression class from the analyzed tree's JSON.
+    Unprovable (any inspection error) is treated as non-deterministic:
+    callers use this to skip a consistency pin, so the safe answer is
+    'keep the pin'."""
     try:
         plan = df._jdf.queryExecution().analyzed()
         return bool(plan.deterministic()) and not _TIME_VALUED_RE.search(
-            plan.toString()
+            plan.toJSON()
         )
     except Exception:
         return False
@@ -1531,9 +1538,12 @@ def _coalesce_local_relation(df: DataFrame) -> DataFrame:
     write) splits into up to one partition per ROW at execution, which
     would land one near-empty data file per row. Coalesce such frames
     to one task before staging; every other plan shape passes through
-    untouched (scan-fed frames keep their parallelism)."""
+    untouched (scan-fed frames keep their parallelism). The OPTIMIZED
+    plan is inspected: SQL VALUES analyzes as a Project over the
+    LocalRelation and only folds into one after optimization (the same
+    test :func:`~dask_awkward_spark.session.local_rows_table` makes)."""
     try:
-        lg = df._jdf.queryExecution().analyzed()
+        lg = df._jdf.queryExecution().optimizedPlan()
         if (
             lg.getClass().getSimpleName() == "LocalRelation"
             and lg.data().size() > 1

@@ -179,3 +179,37 @@ def test_fastpath_file_append_interops_with_spark_files(spark, tmp_path):
         (3, "z"),
         (9, None),
     ]
+
+
+@pytest.mark.parametrize(
+    "coltype, lit",
+    [
+        ("timestamp", "TIMESTAMP'2020-03-01 10:00:0{i}'"),
+        ("date", "DATE'2020-03-0{i}'"),
+        ("decimal(10,2)", "{i}.25"),
+        ("double", "double('NaN')"),
+    ],
+    ids=["timestamp", "date", "decimal", "nan"],
+)
+def test_fallback_values_insert_writes_one_file(spark, tmp_path, coltype, lit):
+    """SQL VALUES outside the driver-side literal set still stage ONE
+    data file on the Spark-writer fallback: the optimized plan folds
+    the VALUES Project into a LocalRelation, which is coalesced to one
+    write task instead of fanning out one file per task."""
+    from dask_awkward_spark.sources.sqlface import snapshot_sql
+
+    p = str(tmp_path / "t")
+    tables = {"t": p}
+    snapshot_sql(
+        spark, f"CREATE TABLE t (id BIGINT, c {coltype}) LOCATION '{p}'", tables
+    )
+    values = ", ".join(f"({i}, {lit.format(i=i)})" for i in range(1, 9))
+    before = _last_job(spark)
+    snapshot_sql(spark, f"INSERT INTO t VALUES {values}", tables)
+    assert _last_job(spark) > before  # the Spark writer ran
+    head = _versions(p)[-1]
+    added = set(_read_manifest(p, head)["files"]) - set(
+        _read_manifest(p, head - 1)["files"]
+    )
+    assert len(added) == 1
+    assert snapshot_read(spark, p).count() == 8

@@ -2853,6 +2853,40 @@ def test_update_nondeterministic_rhs_postimage_matches_data(spark, tmp_path):
     assert not _plan_deterministic(df.select(F.expr("now()").alias("x")))
 
 
+def test_plan_deterministic_reads_expression_classes(spark, tmp_path):
+    """The time-valued gate is structural: current_time() (Spark 4.1,
+    folded per query) keeps the pin, while a string literal or a column
+    spelled like a time function does not — and a current_time() UPDATE
+    commits rows equal to its change-feed postimage."""
+    from dask_awkward_spark.sources.snapshot import (
+        _plan_deterministic,
+        snapshot_changes,
+        snapshot_read,
+        snapshot_write,
+    )
+    from dask_awkward_spark.sources.sqlface import snapshot_sql
+
+    df = spark.range(3).select(F.col("id"), F.col("id").alias("now"))
+    assert not _plan_deterministic(df.select(F.expr("current_time()").alias("x")))
+    assert _plan_deterministic(df.select(F.lit("call now()").alias("x")))
+    assert _plan_deterministic(df.select((F.col("now") + 1).alias("x")))
+    p = str(tmp_path / "ctime")
+    snapshot_write(spark.range(50).select("id", F.lit("").alias("s")), p)
+    snapshot_sql(
+        spark,
+        "UPDATE t SET s = CAST(current_time(6) AS STRING) WHERE id < 25",
+        {"t": p},
+    )
+    post = {
+        r.id: r.s
+        for r in snapshot_changes(spark, p, since=1, row_level=True)
+        .filter("_change_type = 'update_postimage'")
+        .collect()
+    }
+    data = {r.id: r.s for r in snapshot_read(spark, p).filter("id < 25").collect()}
+    assert len(post) == 25 and post == data
+
+
 def test_delete_counts_from_metadata_match_scan(spark, tmp_path):
     """r13: CoW DELETE's pre-rewrite row count comes from manifest
     stats (minus DV positions) — the returned counts must equal the

@@ -329,11 +329,11 @@ def test_sql_merge_action_kind_mismatch_refused(spark, tmp_path):
     spark.range(3).selectExpr("id AS k").createOrReplaceTempView("mm_src")
     for bad, msg in [
         ("MERGE INTO t USING mm_src s ON t.k = s.k "
-         "WHEN MATCHED THEN INSERT", "not INSERT"),
+         "WHEN MATCHED THEN INSERT", "near 'INSERT'"),
         ("MERGE INTO t USING mm_src s ON t.k = s.k "
-         "WHEN NOT MATCHED THEN DELETE", "only INSERT"),
+         "WHEN NOT MATCHED THEN DELETE", "near 'DELETE'"),
         ("MERGE INTO t USING mm_src s ON t.k = s.k "
-         "WHEN NOT MATCHED THEN UPDATE SET v = 1", "only INSERT"),
+         "WHEN NOT MATCHED THEN UPDATE SET v = 1", "near 'UPDATE'"),
     ]:
         with pytest.raises(ValueError, match=msg):
             snapshot_sql(spark, bad, {"t": p})
@@ -679,7 +679,7 @@ def test_merge_column_list_insert_sql_form(spark, tmp_path):
         a = sorted(map(str, snapshot_read(spark, p).collect()))
         b = sorted(map(str, snapshot_read(spark, p2).collect()))
         assert a == b
-        with pytest.raises(ValueError, match="column list"):
+        with pytest.raises(ValueError, match="inserted values cannot match"):
             snapshot_sql(
                 spark,
                 "MERGE INTO t USING clins_src s ON t.k = s.k "
@@ -688,3 +688,109 @@ def test_merge_column_list_insert_sql_form(spark, tmp_path):
             )
     finally:
         spark.catalog.dropTempView("clins_src")
+
+
+# ---- lexer edge cases: Spark's parser reads the statement ------------
+
+
+def test_where_backslash_escaped_quote():
+    assert parse_where("s = 'it\\'s'") == [("s", "=", "it's")]
+    assert parse_where("s = 'it''s'") == [("s", "=", "it's")]
+
+
+def test_where_backticked_column():
+    assert parse_where("`my col` = 1 AND `meta`.`g` < 2") == [
+        ("my col", "=", 1), ("meta.g", "<", 2)
+    ]
+
+
+def test_update_where_literal_holding_where(spark, tmp_path):
+    """A WHERE keyword inside a string literal is content, not a clause
+    boundary: exactly the matching row updates."""
+    p = str(tmp_path / "uw")
+    snapshot_write(
+        spark.createDataFrame(
+            [(1, 0, "x WHERE y"), (2, 0, "x"), (3, 0, "y")],
+            "k bigint, v bigint, note string",
+        ),
+        p,
+    )
+    st = snapshot_sql(
+        spark, "UPDATE t SET v = 1 WHERE note = 'x WHERE y'", {"t": p}
+    )
+    assert st["updated_rows"] == 1
+    got = sorted((r.k, r.v) for r in snapshot_read(spark, p).collect())
+    assert got == [(1, 1), (2, 0), (3, 0)]
+
+
+def test_merge_using_nested_subquery_with_literal_punctuation(spark, tmp_path):
+    """A USING subquery nested two levels deep whose string literals
+    hold ')' and ';' passes through whole."""
+    p = _tbl(spark, tmp_path)  # k 0..9, v = 2k
+    st = snapshot_sql(
+        spark,
+        "MERGE INTO t USING (SELECT k, v FROM (SELECT k, v, tag FROM "
+        "(SELECT id AS k, 7.0D AS v, 'a);b' AS tag FROM range(3)) x "
+        "WHERE tag = 'a);b') y) s ON t.k = s.k "
+        "WHEN MATCHED THEN UPDATE SET v = s.v",
+        {"t": p},
+    )
+    assert st["updated_rows"] == 3
+    got = dict((r.k, r.v) for r in snapshot_read(spark, p).collect())
+    assert [got[k] for k in range(4)] == [7.0, 7.0, 7.0, 6.0]
+
+
+def test_backslash_literal_same_in_values_and_where(spark, tmp_path):
+    """VALUES and WHERE read 'a\\\\b' the same way (Spark's rule: one
+    backslash), so a DELETE with the INSERT's literal finds the row."""
+    p = str(tmp_path / "bs")
+    snapshot_write(spark.createDataFrame([("z",)], "s string"), p)
+    snapshot_sql(spark, "INSERT INTO t VALUES ('a\\\\b')", {"t": p})
+    assert sorted(r.s for r in snapshot_read(spark, p).collect()) == ["a\\b", "z"]
+    st = snapshot_sql(spark, "DELETE FROM t WHERE s = 'a\\\\b'", {"t": p})
+    assert st["removed_rows"] == 1
+    assert [r.s for r in snapshot_read(spark, p).collect()] == ["z"]
+
+
+def test_insert_select_body_tag_as_of(spark, tmp_path):
+    """TAG AS OF inside an INSERT body resolves through the tag pin."""
+    p = _tbl(spark, tmp_path)
+    snapshot_tag(p, "gold")  # v1: k 0..9
+    snapshot_sql(spark, "DELETE FROM t WHERE k >= 5", {"t": p})
+    q = _tbl(spark, tmp_path, "u")
+    snapshot_sql(spark, "DELETE FROM u WHERE k >= 0", {"u": q})
+    snapshot_sql(
+        spark,
+        "INSERT INTO u SELECT k, v, meta FROM t TAG AS OF 'gold' WHERE k >= 5",
+        {"t": p, "u": q},
+    )
+    assert sorted(r.k for r in snapshot_read(spark, q).collect()) == [5, 6, 7, 8, 9]
+
+
+def test_show_create_round_trips_quote_and_backslash_check(spark, tmp_path):
+    """A CHECK value holding both ' and \\ renders as a Spark literal
+    that replays to the same constraint."""
+    from dask_awkward_spark.sources.sqlface import snapshot_sql_script
+
+    p, p2 = str(tmp_path / "c1"), str(tmp_path / "c2")
+    tables = {}
+    snapshot_sql(spark, f"CREATE TABLE c1 (s string) LOCATION '{p}'", tables)
+    snapshot_sql(
+        spark,
+        "ALTER TABLE c1 ADD CONSTRAINT q CHECK (s IN ('it''s', 'a\\\\b'))",
+        tables,
+    )
+    stmt = snapshot_sql(spark, "SHOW CREATE TABLE c1", tables).first()[0]
+    snapshot_sql_script(
+        spark, stmt.replace("TABLE c1", "TABLE c2").replace(p, p2), tables
+    )
+    m1, m2 = (snapshot_versions(x)[-1]["version"] for x in (p, p2))
+    from dask_awkward_spark.sources.snapshot import _read_manifest
+
+    assert (
+        _read_manifest(p2, m2)["constraints"]
+        == _read_manifest(p, m1)["constraints"]
+    )
+    snapshot_sql(spark, "INSERT INTO c2 VALUES ('a\\\\b'), ('it''s')", tables)
+    with pytest.raises(Exception, match="q"):
+        snapshot_sql(spark, "INSERT INTO c2 VALUES ('a\\\\\\\\b')", tables)
